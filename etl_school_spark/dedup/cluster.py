@@ -24,6 +24,8 @@ import warnings
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_school_spark.operators.setops import values_table
+
 
 def _session_checkpoint_dir(df: DataFrame) -> str | None:
     """Durable-checkpoint posture for the REGISTERED entry points (r13,
@@ -132,7 +134,7 @@ def _collected_components(edges: DataFrame, src: str, dst: str) -> DataFrame:
         [StructField("node", ntype), StructField("component", ntype)]
     )
     labels = [(x, find(x)) for x in list(parent)]
-    return edges.sparkSession.createDataFrame(labels, out_schema)
+    return values_table(edges.sparkSession, labels, out_schema)
 
 
 def connected_components(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from etl_school_spark.functions.text import tokens
+from etl_school_spark.operators.setops import values_table
 
 UNK = "<unk>"
 
@@ -229,7 +230,7 @@ def save_bigram_lm(lm: BigramLM, path: str) -> None:
     lm.bigrams.write.mode("overwrite").parquet(f"{path}/bigrams")
     lm.contexts.write.mode("overwrite").parquet(f"{path}/contexts")
     spark = lm.vocab.sparkSession
-    spark.createDataFrame([(lm.v, float(lm.k))], "v long, k double").write.mode(
+    values_table(spark, [(lm.v, float(lm.k))], "v long, k double").write.mode(
         "overwrite"
     ).parquet(f"{path}/meta")
 

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_school_spark.operators.setops import values_table
+
 _WIDTH = 4  # hex chars → 16-bit buckets
 _BUCKETS = 16**_WIDTH
 
@@ -191,8 +193,8 @@ def mixture_sample(
         k_full = int(w)  # floor for non-negative weights
         frac = w - k_full
         rows.append((cls, k_full, threshold_hex(frac) if frac > 0 else None))
-    wtab = spark.createDataFrame(
-        rows, f"{class_col} string, _k_full int, _thresh string"
+    wtab = values_table(
+        spark, rows, f"{class_col} string, _k_full int, _thresh string"
     )
     n_ep = F.col("_k_full") + F.when(F.col("_thresh").isNotNull(), 1).otherwise(0)
     ep_hash = hash_bucket(

@@ -18,6 +18,8 @@ from graphlib import TopologicalSorter
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_school_spark.operators.setops import values_table
+
 
 @dataclass
 class Task:
@@ -67,7 +69,8 @@ class TaskDag:
             except Exception:
                 status[name] = "FAILED"
                 audit_rows.append((run_id, name, "FAILED", t0, time.time(), 0, traceback.format_exc()[-2000:]))
-        audit = self.spark.createDataFrame(
+        audit = values_table(
+            self.spark,
             audit_rows,
             "run_id string, task_name string, state string, scheduled_time double, "
             "completed_time double, rows_processed long, error string",

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_school_spark.operators.setops import values_table
+
 # role → masking strategy for a PAN-like column (A4:1019-1026)
 ROLES = ("admin", "auditor", "analyst")
 
@@ -54,7 +56,7 @@ def forget_keys(df: DataFrame, key_col: str, keys: DataFrame | list) -> DataFram
     with the result, like ``anonymize``."""
     spark = df.sparkSession
     if isinstance(keys, list):
-        keys_df = spark.createDataFrame([(k,) for k in keys], f"{key_col} {df.schema[key_col].dataType.simpleString()}")
+        keys_df = values_table(spark, [(k,) for k in keys], f"{key_col} {df.schema[key_col].dataType.simpleString()}")
     else:
         keys_df = keys.toDF(key_col)
     return df.join(F.broadcast(keys_df), key_col, "left_anti")
@@ -70,7 +72,8 @@ def pii_classification(spark: SparkSession) -> DataFrame:
         ("client_buy_orders", "phone", "PHONE", "MEDIUM", True, "NONE", "contact"),
         ("client_buy_orders", "address", "ADDRESS", "MEDIUM", True, "NONE", "location"),
     ]
-    return spark.createDataFrame(
+    return values_table(
+        spark,
         rows,
         "object_name string, column_name string, pii_type string, sensitivity_level string, "
         "masking_required boolean, masking_rule string, rationale string",

@@ -14,6 +14,8 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_school_spark.operators.setops import values_table
+
 
 @dataclass
 class DqRule:
@@ -131,8 +133,8 @@ def streaming_dq(
 def dq_alerts(spark: SparkSession, metrics: DataFrame, rules: list[DqRule]) -> DataFrame:
     """G7: join latest metrics against thresholds, emit breach rows
     (A4:874-919)."""
-    thresholds = spark.createDataFrame(
-        [(r.name, float(r.threshold)) for r in rules], "metric_name string, threshold double"
+    thresholds = values_table(
+        spark, [(r.name, float(r.threshold)) for r in rules], "metric_name string, threshold double"
     )
     latest = latest_metrics(metrics)
     return (

@@ -60,6 +60,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_school_spark.operators.setops import values_table
+
 # gemm-vs-sequential-fold reassociation error for unit-norm dim≤4096
 # doubles is ~1e-13; candidate selection keeps everything within this
 # margin of the cut so the exact rescoring can never lose a true result
@@ -346,8 +348,8 @@ def cosine_pairs_dense(
             "memory allows"
         )
     if n < 2:
-        return emb.sparkSession.createDataFrame(
-            [], "id_a long, id_b long, cosine_sim double"
+        return values_table(
+            emb.sparkSession, [], "id_a long, id_b long, cosine_sim double"
         )
     x_ids = np.array([r[0] for r in rows], dtype=np.int64)
     order = np.argsort(x_ids, kind="stable")

@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_school_spark.operators.setops import values_table
+
 # small engine-native catalog (dimension the orders generator looks up —
 # the reference uses a 29-entry JSON catalog; values here are our own)
 CAR_CATALOG = [
@@ -34,7 +36,7 @@ CAR_CATALOG_SCHEMA = (
 
 
 def car_catalog(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(CAR_CATALOG, CAR_CATALOG_SCHEMA)
+    return values_table(spark, CAR_CATALOG, CAR_CATALOG_SCHEMA)
 
 
 def _h(seed: int, *cols) -> F.Column:

@@ -16,9 +16,10 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StringType, StructField, StructType
 
-from etl_school_spark.sources.readers import read_stage, split_corrupt
+from etl_school_spark.operators.setops import values_table
+from etl_school_spark.sources.readers import CORRUPT_COL, read_stage, split_corrupt
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "append") -> None:
@@ -50,15 +51,22 @@ def copy_into(
     t0 = time.time()
     pat = pattern or "*"
     files = sorted(glob.glob(os.path.join(stage_dir, pat)))
+    if fmt == "json" and CORRUPT_COL not in schema.fieldNames():
+        # without the column a truncated line parses into an all-NULL row
+        # and lands in the target; with it, split_corrupt rejects the line
+        schema = StructType(list(schema.fields) + [StructField(CORRUPT_COL, StringType())])
     staged = read_stage(spark, stage_dir, schema, fmt=fmt, pattern=pattern)
     good, bad = split_corrupt(staged) if fmt == "json" else (staged, None)
-    n = good.count()
-    if n:
-        write_parquet(good, target_dir)
     n_bad = 0
-    if bad is not None and not bad.isEmpty():
-        n_bad = bad.count()
-        bad.write.mode("append").json(target_dir + "__rejects")
+    try:
+        n = good.count()
+        if n:
+            write_parquet(good, target_dir)
+        if bad is not None and not bad.isEmpty():
+            n_bad = bad.count()
+            bad.write.mode("append").json(target_dir + "__rejects")
+    finally:
+        staged.unpersist()  # split_corrupt cached it
     if history_dir:
         row = (
             target_dir,
@@ -69,7 +77,8 @@ def copy_into(
             float(t0),
             float(time.time()),
         )
-        spark.createDataFrame(
+        values_table(
+            spark,
             [row],
             "target string, n_files long, rows_loaded long, rows_rejected long, "
             "file_bytes long, started double, completed double",

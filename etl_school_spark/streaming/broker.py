@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from etl_school_spark.operators.setops import values_table
+
 
 class FileBroker:
     def __init__(self, spark: SparkSession, root: str):
@@ -105,7 +107,8 @@ class FileBroker:
             )
             if per_task:
                 batch_df.write.mode("append").parquet(sink_dir)
-                audit = batch_df.sparkSession.createDataFrame(
+                audit = values_table(
+                    batch_df.sparkSession,
                     [
                         (topic, group, int(r.consumer_id), int(batch_id), int(r.n_messages), time.time())
                         for r in per_task
@@ -161,7 +164,8 @@ class FileBroker:
                 n = batch_df.count()
                 if n:
                     batch_df.write.mode("append").parquet(sink_dir)
-                    batch_df.sparkSession.createDataFrame(
+                    values_table(
+                        batch_df.sparkSession,
                         [(topic_, group, int(_m), int(batch_id), int(n), time.time())],
                         "topic string, claimed_by string, consumer_id int, batch_id long, "
                         "n_messages long, delivered_at double",

@@ -136,8 +136,13 @@ def fan_out(df: DataFrame, partitions: int | None = None) -> DataFrame:
     # of probes per sweep). A frame's partition count is a pure function
     # of its canonicalized plan + session confs, so memoize per
     # (application, semantic hash, parallelism). The memo holds partition
-    # COUNTS only — never data — and a hash collision can only mis-size
-    # a round-robin repartition, never change results.
+    # COUNTS only, never data, but a stale count is not result-neutral: a
+    # hash collision (odds ~2^-32 a pair, <= 512 entries) or files changed
+    # under an unchanged path within one application can flip the
+    # repartition decision, and the changed partition layout changes the
+    # rows that partition-sensitive operators downstream emit (seeded
+    # sample(), monotonically_increasing_id). That risk is accepted for
+    # the probe time saved.
     try:
         key = (df.sparkSession.sparkContext.applicationId, df.semanticHash(), n)
     except Exception:

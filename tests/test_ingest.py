@@ -71,6 +71,35 @@ def test_copy_into_appends_and_purges(spark, tmp_path):
     assert spark.read.parquet(target).count() == 15
 
 
+def test_copy_into_bare_schema_rejects_truncated_lines(spark, tmp_path):
+    """A schema without _corrupt_record still diverts unparseable lines to
+    <target>__rejects instead of landing them as all-NULL rows."""
+    from etl_school_spark.sources.writers import copy_into
+
+    stage = str(tmp_path / "stage")
+    target = str(tmp_path / "table")
+    os.makedirs(stage)
+    produced = _write_orders_json(spark, os.path.join(stage, "batch_1.json"), n=10, corrupt=2) + 2
+
+    loaded = copy_into(spark, stage, target, CLIENT_BUY_ORDERS)
+    rejected = spark.read.json(target + "__rejects").count()
+    assert loaded + rejected == produced
+    assert rejected == 2
+    assert spark.read.parquet(target).filter(F.col("txid").isNull()).count() == 0
+
+
+def test_copy_into_leaves_nothing_cached(spark, tmp_path):
+    """copy_into releases the staged batch split_corrupt caches."""
+    from etl_school_spark.sources.writers import copy_into
+
+    stage = str(tmp_path / "stage")
+    os.makedirs(stage)
+    _write_orders_json(spark, os.path.join(stage, "batch_1.json"), n=10, corrupt=1)
+    spark.catalog.clearCache()
+    assert copy_into(spark, stage, str(tmp_path / "table"), CLIENT_BUY_ORDERS) == 10
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_generator_deterministic_and_dimensional(spark):
     from etl_school_spark.sources.generator import car_catalog, gen_buy_orders
 

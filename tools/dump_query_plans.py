@@ -1,5 +1,10 @@
-"""Write plans/r14/<query>_<tag>.txt: the explain("formatted") output of
-each named query (default: the bench HEADLINE set) at the given sf_dir.
+"""Write the explain("formatted") output of each named query (default:
+the bench HEADLINE set) at the given sf_dir into plans/.
+
+The tag names the round directory and the file suffix: "r15_before"
+writes plans/r15/<query>_before.txt, a bare "r15" writes
+plans/r15/<query>.txt, and a tag without an rNN prefix writes
+plans/r14/<query>_<tag>.txt.
 
 Usage: python tools/dump_query_plans.py <tag> [sf_dir] [query ...]
 """
@@ -22,12 +27,10 @@ def main() -> int:
     spark = get_spark("dump-query-plans")
     qs = e.queries()
     names = sys.argv[3:] or [n for n in HEADLINE if n in qs]
-    # r15 (ADVICE): derive the round directory from the tag — a tag of the
-    # form "r15_before" writes plans/r15/<query>_before.txt (the old code
-    # hardcoded plans/r14/ whatever the tag said). A prefix-less tag keeps
-    # the legacy layout for backward compatibility.
-    m = re.match(r"(r\d+)_(.+)", tag)
+    # a prefix-less tag keeps the legacy plans/r14/ layout
+    m = re.fullmatch(r"(r\d+)(?:_(.+))?", tag)
     round_dir, file_tag = (m.group(1), m.group(2)) if m else ("r14", tag)
+    suffix = f"_{file_tag}" if file_tag else ""
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans", round_dir,
@@ -40,7 +43,7 @@ def main() -> int:
             spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
         )
         formatted = re.sub(r"Location: \S+", "Location: <sf_dir>", formatted)
-        path = os.path.join(out_dir, f"{name}_{file_tag}.txt")
+        path = os.path.join(out_dir, f"{name}{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(f"# {name} @ {sf_dir} — explain('formatted'), tag={tag}\n")
             fh.write(formatted.rstrip() + "\n")
